@@ -1,7 +1,7 @@
 """Bench harness: one JSON line with the headline metric + per-query secs.
 
 Headline: validated clips/sec — the full audio rule-set pass (row-local
-single-pass rules, salted uniqueness, referential joins, t-digest drift,
+single-pass rules, two-phase uniqueness, referential joins, t-digest drift,
 pandas-UDF PCM SNR) over a deterministic synthetic clip table at the scale
 factor implied by $SPARK_GRAFT_SF_DIR (BASELINE.json north-star metric,
 SF=0.1 → 1M clips).

@@ -16,7 +16,7 @@ Architecture (Spark-first, NOT a port):
                     evaluated in ONE projection pass (array-of-structs →
                     filter → explode), so N rules != N scans.
 - ``operators``   — set-oriented rules that need more than a projection:
-                    salted two-phase uniqueness, broadcast/sort-merge
+                    two-phase uniqueness, broadcast/sort-merge
                     referential joins, t-digest distribution drift, vectorized
                     audio decode/SNR pandas UDFs, plus training-data-pipeline
                     operators (dedup, similarity search, text analysis).

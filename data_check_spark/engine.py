@@ -22,7 +22,7 @@ Plan shape (scale rationale):
   (array-of-structs → explode), so per-row rule work is a single pass
   regardless of rule count.
 - Set-oriented rules each contribute their own (shuffle-bearing) subplan:
-  salted two-phase uniqueness, broadcast/SMJ referential joins, sketch-only
+  partial+final-aggregate uniqueness, broadcast/SMJ referential joins, sketch-only
   drift shuffle — all reading the narrow cache, never the wide scan.
 - ``violations`` is persisted before the verdict aggregation so the verdict
   job and any caller action (count, write) execute the rule plans once.
@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -41,36 +42,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark import checkpoint as cp
-from data_check_spark.operators.audio import (
-    SNR_COL,
-    audio_snr_violations,
-    prepare_clips,
-    snr_column_violations,
-    transcript_match_violations,
-)
-from data_check_spark.operators.drift import (
-    categorical_drift_violations,
-    drift_violations,
-    rate_drift_violations,
-    volume_drift_violations,
-)
-from data_check_spark.operators.referential import (
-    anti_join_violations,
-    orphan_violations,
-    reconcile_violations,
-    semi_join_violations,
-)
-from data_check_spark.operators.funcdep import func_dep_violations
-from data_check_spark.operators.uniqueness import (
-    aggregate_unique_violations,
-    unique_violations,
-)
+from data_check_spark.operators.audio import SNR_COL, prepare_clips
+from data_check_spark.operators.drift import drift_violations_multi
+from data_check_spark.operators.referential import fused_dim_checks
+from data_check_spark.operators.uniqueness import duplicate_keys
 from data_check_spark.rules.compiler import (
     apply_row_rules,
     compile_rule_many,
     gate_condition,
 )
-from data_check_spark.rules.spec import Rule, RuleCatalog
+from data_check_spark.rules.spec import SET_KINDS, Rule, RuleCatalog, SetScope
 from data_check_spark.schemas import CLIPS_SCHEMA, validate_schema
 
 
@@ -92,149 +73,6 @@ class ValidationResult:
         counts = {r["rule_id"]: r["n"] for r in rows}
         top5 = [rid for rid, _ in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:5]]
         return {"total": sum(counts.values()), "per_rule": counts, "top5": top5}
-
-
-def _dispatch_set_rule(
-    rule: Rule,
-    clips: DataFrame,
-    dims: dict[str, DataFrame],
-    *,
-    partition_col: str,
-    shared_dups: DataFrame | None = None,
-    run_ts: str | None = None,
-) -> DataFrame:
-    p = rule.params
-    gate = gate_condition(rule.gate, run_ts, rule.rule_id) if rule.gate else None
-    if rule.kind == "unique":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return unique_violations(scoped, rule.rule_id, rule.column or "clip_id",
-                                 partition_col=partition_col, dups=shared_dups)
-    if rule.kind == "aggregate_unique":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return aggregate_unique_violations(scoped, rule.rule_id, rule.column or "clip_id",
-                                           dups=shared_dups)
-    if rule.kind == "referential":
-        dim = dims[p["dim"]]
-        mode = p.get("mode", "anti")
-        kwargs = dict(fact_key=rule.column or "clip_id", dim_key=p.get("dim_key", "clip_id"))
-        if mode == "anti":
-            return anti_join_violations(clips, dim, rule.rule_id, gate=gate,
-                                        partition_col=partition_col, **kwargs)
-        if mode == "semi":
-            return semi_join_violations(clips, dim, rule.rule_id, gate=gate,
-                                        partition_col=partition_col, **kwargs)
-        if mode == "orphan":
-            return orphan_violations(clips, dim, rule.rule_id, **kwargs)
-        raise ValueError(f"unknown referential mode {mode!r} ({rule.rule_id})")
-    if rule.kind == "drift":
-        baseline = dims["baseline_stats"]
-        return drift_violations(
-            clips, baseline, rule.rule_id, rule.column,
-            threshold=p.get("threshold", 0.25), partition_col=partition_col,
-        )
-    if rule.kind == "cat_drift":
-        return categorical_drift_violations(
-            clips, rule.rule_id, rule.column or "codec",
-            threshold_bp=p.get("threshold_bp", 2500),
-            min_rows=p.get("min_rows", 100), partition_col=partition_col,
-        )
-    if rule.kind == "rate_drift":
-        return rate_drift_violations(
-            clips, rule.rule_id, p["predicate"],
-            threshold_bp=p.get("threshold_bp", 500),
-            min_rows=p.get("min_rows", 100), partition_col=partition_col,
-        )
-    if rule.kind == "volume_drift":
-        return volume_drift_violations(
-            clips, rule.rule_id,
-            threshold_bp=p.get("threshold_bp", 5000), partition_col=partition_col,
-        )
-    if rule.kind == "audio_decode":
-        if SNR_COL in clips.columns:  # precomputed in the single wide pass
-            return snr_column_violations(
-                clips, rule.rule_id, snr_col=SNR_COL,
-                snr_db_min=p.get("snr_db_min", 30.0),
-                gate=gate, partition_col=partition_col,
-            )
-        return audio_snr_violations(
-            clips, rule.rule_id,
-            snr_db_min=p.get("snr_db_min", 30.0), cap_ms=p.get("cap_ms", 100),
-            gate=gate, partition_col=partition_col,
-        )
-    if rule.kind == "agg_threshold":
-        from data_check_spark.operators.profile import agg_threshold_violations
-
-        scoped = clips.filter(gate) if gate is not None else clips
-        return agg_threshold_violations(
-            scoped, rule.rule_id, p["metric_expr"],
-            min_value=p.get("min_value"), max_value=p.get("max_value"),
-        )
-    if rule.kind == "outlier":
-        from data_check_spark.operators.profile import outlier_violations
-
-        scoped = clips.filter(gate) if gate is not None else clips
-        return outlier_violations(
-            scoped, rule.rule_id, rule.column,
-            partition_col=partition_col,
-            group_col=p.get("group_by"),
-            scale=p.get("scale", 100),
-        )
-    if rule.kind == "func_dep":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return func_dep_violations(
-            scoped, rule.rule_id, p["determinant"], rule.column,
-            partition_col=partition_col,
-            count_null_dependent=p.get("count_null_dependent", False),
-            grain=p.get("grain", "row"),
-        )
-    if rule.kind == "reconcile":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return reconcile_violations(
-            scoped, dims[p["dim"]], rule.rule_id,
-            parent_key=p.get("fact_key", "clip_id"),
-            child_key=p.get("dim_key", "clip_id"),
-            total_col=rule.column,
-            amount_col=p["amount_col"],
-            tolerance_cents=p.get("tolerance_cents", 0),
-            partition_col=partition_col,
-        )
-    if rule.kind == "cardinality":
-        from data_check_spark.operators.referential import cardinality_rule_violations
-
-        scoped = clips.filter(gate) if gate is not None else clips
-        return cardinality_rule_violations(
-            scoped, dims[p["dim"]], rule.rule_id,
-            parent_key=p.get("fact_key", "clip_id"),
-            child_key=p.get("dim_key", "clip_id"),
-            min_children=p.get("min_children", 1),
-            max_children=p.get("max_children"),
-            partition_col=partition_col,
-        )
-    if rule.kind == "transcript_match":
-        # Mirror the fused path exactly (fused_dim_checks call below): the
-        # join key is params["dim_key"] on BOTH sides and the compared fact
-        # column is rule.column — a standalone dispatch (e.g. any resume run,
-        # where fusion is disabled) must not fall back to the operator's
-        # defaults for them.
-        return transcript_match_violations(
-            clips, dims[p["dim"]], rule.rule_id,
-            fact_key=p.get("dim_key", "clip_id"), dim_key=p.get("dim_key", "clip_id"),
-            fact_text=rule.column or "transcript",
-            ref_text=p.get("ref_column", "transcript_ref"),
-            partition_col=partition_col,
-        )
-    if rule.kind == "transcript_wer":
-        from data_check_spark.operators.audio import transcript_wer_violations
-
-        return transcript_wer_violations(
-            clips, dims[p["dim"]], rule.rule_id,
-            fact_key=p.get("dim_key", "clip_id"), dim_key=p.get("dim_key", "clip_id"),
-            fact_text=rule.column or "transcript",
-            ref_text=p.get("ref_column", "transcript_ref"),
-            max_wer_bp=p.get("max_wer_bp", 2500),
-            partition_col=partition_col,
-        )
-    raise ValueError(f"unhandled set rule kind {rule.kind!r}")
 
 
 def _partition_violation_counts(violations: DataFrame, warning_ids: list[str]) -> DataFrame:
@@ -318,16 +156,6 @@ def run_validation(
     run_id = uuid.uuid4().hex[:12]
     run_ts = run_ts or time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
     t0 = time.monotonic()
-
-    import os as _os
-    import sys as _sys
-
-    _debug = _os.environ.get("DATA_CHECK_DEBUG_TIMING") == "1"
-
-    def _mark(label: str, since: float) -> None:
-        if _debug:
-            print(f"[timing] {label}: {time.monotonic() - since:.1f}s", file=_sys.stderr, flush=True)
-
     schema_problems = validate_schema(clips, CLIPS_SCHEMA)
 
     # --- pre-flight: rules whose dimension is missing or empty are skipped
@@ -342,8 +170,8 @@ def run_validation(
             synthetic.append(("SCHEMA_MISMATCH", "N/A", None, prob))
     unavailable_dims: set[str] = set()
     needed_dims = {
-        r.params["dim"] for r in catalog.set_oriented if "dim" in r.params
-    } | ({"baseline_stats"} if any(r.kind == "drift" for r in catalog.set_oriented) else set())
+        d for r in catalog.set_oriented for d in SET_KINDS[r.kind].dims(r.params)
+    }
     # One Spark job probes ALL dims for emptiness (a per-dim isEmpty() is a
     # tiny job per dimension per run — they fold into a single union scan of
     # one row each).
@@ -367,8 +195,7 @@ def run_validation(
     if unavailable_dims:
         skipped = [
             r for r in catalog.set_oriented
-            if r.params.get("dim") in unavailable_dims
-            or (r.kind == "drift" and "baseline_stats" in unavailable_dims)
+            if SET_KINDS[r.kind].dims(r.params) & unavailable_dims
         ]
         catalog = RuleCatalog([r for r in catalog if r not in skipped])
 
@@ -422,7 +249,6 @@ def run_validation(
         # writes the narrow table to the cluster checkpoint dir instead
         # (HDFS/S3) so a 10^12-row run survives executor loss at the cost of
         # one distributed write — the right default on a real cluster.
-        _t = time.monotonic()
         if reliable_cache:
             sc = spark.sparkContext
             if sc.getCheckpointDir() is None:
@@ -441,7 +267,6 @@ def run_validation(
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         if prepared.rdd.getNumPartitions() > 2 * n_parts:
             prepared = prepared.coalesce(2 * n_parts)
-        _mark("wide_pass_checkpoint", _t)
 
     # --- per-rule isolation (reference: a crashing per-row check degrades to
     # UNEXPECTED_ERROR_<fn> violation rows, dekispart.py:1151-1157). Each
@@ -497,13 +322,11 @@ def run_validation(
     if compiled:
         parts.append(apply_row_rules(prepared, compiled, partition_col=partition_col))
 
-    # All drift rules share ONE sketch pass (one mapInPandas + one merge
-    # shuffle regardless of how many columns are monitored).
+    # Two or more drift rules share ONE sketch pass (one mapInPandas + one
+    # merge shuffle regardless of how many columns are monitored).
+    fused_ids: set[str] = set()
     drift_rules = [r for r in catalog.set_oriented if r.kind == "drift"]
-    if drift_rules:
-        from data_check_spark.operators.drift import drift_violations_multi
-
-        _t = time.monotonic()
+    if len(drift_rules) > 1:
         parts.append(
             drift_violations_multi(
                 prepared,
@@ -512,12 +335,11 @@ def run_validation(
                 partition_col=partition_col,
             )
         )
-        _mark("dispatch drift (fused)", _t)
+        fused_ids.update(r.rule_id for r in drift_rules)
 
     # Fuse FK-anti + orphan + byte-match rules that target the same dim into
     # ONE full-outer join (3 joins -> 1). Resume runs keep the per-rule path
     # because the orphan rule is global-grain there (full key scan).
-    fused_ids: set[str] = set()
     if not done:
         by_dim: dict[tuple[str, str, str], dict[str, Rule]] = {}
         for r in catalog.set_oriented:
@@ -530,9 +352,6 @@ def run_validation(
         for (dim_name, fact_key, dim_key), group in by_dim.items():
             if len(group) < 2:
                 continue
-            from data_check_spark.operators.referential import fused_dim_checks
-
-            _t = time.monotonic()
             anti = group.get("anti")
             orphan = group.get("orphan")
             match = group.get("match")
@@ -553,56 +372,25 @@ def run_validation(
                 )
             )
             fused_ids.update(r.rule_id for r in group.values())
-            _mark(f"dispatch fused dim checks ({dim_name})", _t)
 
-    # Row-grain and value-grain uniqueness on the same column share ONE
-    # duplicate-key computation (lazily checkpointed: computed by the first
-    # consumer, reused by the second).
-    from data_check_spark.operators.uniqueness import duplicate_keys
-
+    # Ungated rules that share duplicate keys (row- and value-grain
+    # uniqueness) on the same column share ONE duplicate-key computation
+    # (lazily checkpointed: computed by the first consumer, reused after).
+    dup_cols = Counter(
+        r.column or "clip_id" for r in catalog.set_oriented
+        if SET_KINDS[r.kind].shares_dups and not r.gate
+    )
     uniq_src = clips_full if done else prepared
-
-    def _ungated_uniq(col: str) -> int:
-        return sum(
-            1 for r in catalog.set_oriented
-            if r.kind in ("unique", "aggregate_unique") and (r.column or "clip_id") == col
-            and not r.gate
-        )
-
     shared_dups = {
         col: duplicate_keys(uniq_src, col).localCheckpoint(eager=False)
-        for col in {r.column or "clip_id" for r in catalog.set_oriented
-                    if r.kind in ("unique", "aggregate_unique") and not r.gate}
-        if _ungated_uniq(col) > 1
+        for col, n in dup_cols.items() if n > 1
     }
 
     for rule in catalog.set_oriented:
-        if rule.kind == "drift" or rule.rule_id in fused_ids:
+        if rule.rule_id in fused_ids:
             continue
-        # cat_drift / rate_drift / volume_drift are global-grain too: their
-        # baseline is the CURRENT table (mix / rate / mean size), which a
-        # resume run must compute over all partitions, not just the
-        # remaining ones.
-        # func_dep too: the violating-key set depends on the whole table.
-        # reconcile: orphan child totals are not partition-scoped (no parent
-        # row), so like referential/orphan a resume run must see all keys.
-        # cardinality: child counts are a global property of the child
-        # table — a resume run must count over all children.
-        # outlier: fences are per-group — when grouped by the partition
-        # column (the default) each partition's fence is self-contained, so
-        # partition grain; grouped by anything else, the fence spans
-        # partitions and a resume run must learn it over the whole table.
-        global_grain = rule.kind in (
-            "unique", "aggregate_unique", "cat_drift", "rate_drift", "volume_drift",
-            "func_dep", "reconcile", "cardinality",
-        ) or (
-            rule.kind == "referential" and rule.params.get("mode") == "orphan"
-        ) or (
-            rule.kind == "outlier"
-            and rule.params.get("group_by") not in (None, partition_col)
-        )
-        dups = None if rule.gate else shared_dups.get(rule.column or "clip_id")
-        _t = time.monotonic()
+        kind = SET_KINDS[rule.kind]
+        global_grain = kind.is_global(rule.params, partition_col)
         if global_grain and batch_member:
             # Member batches never run global-grain rules: the owner batch
             # scans the full key set ONCE and emits every partition's rows
@@ -612,32 +400,26 @@ def run_validation(
             # double-reports against the owner.
             continue
         try:
-            if done and global_grain:
-                # Full-table key scan (column-pruned; never touches bytes).
-                v = _dispatch_set_rule(rule, clips_full, dims, partition_col=partition_col,
-                                       shared_dups=dups, run_ts=run_ts)
-                if cp_done and rule.kind in (
-                    "unique", "cat_drift", "rate_drift", "volume_drift",
-                    "func_dep", "outlier", "reconcile", "cardinality",
-                ):
-                    # Partition-attributed output: rows in partitions a
-                    # PREVIOUS attempt checkpointed were already reported
-                    # by that attempt. Keep NULL-partition rows — ~isin is
-                    # three-valued and would silently drop them.
-                    v = v.filter(
-                        ~F.col("partition").isin(cp_done)
-                        | F.col("partition").isNull()
-                    )
-                parts.append(v)
-            else:
-                parts.append(_dispatch_set_rule(rule, prepared, dims, partition_col=partition_col,
-                                                shared_dups=dups, run_ts=run_ts))
+            # Resumed global-grain rules scan the full table (column-pruned;
+            # never touches bytes).
+            src = clips_full if done and global_grain else prepared
+            gate = gate_condition(rule.gate, run_ts, rule.rule_id) if rule.gate else None
+            if gate is not None and kind.gate_mode(rule.params) == "filter":
+                src, gate = src.filter(gate), None
+            share = kind.shares_dups and not rule.gate
+            dups = shared_dups.get(rule.column or "clip_id") if share else None
+            v = kind.build(rule, src, SetScope(dims, partition_col, gate, dups))
+            if cp_done and global_grain:
+                # Rows in partitions a PREVIOUS attempt checkpointed were
+                # already reported by that attempt. Keep NULL-partition rows
+                # (~isin is three-valued and would silently drop them).
+                v = v.filter(~F.col("partition").isin(cp_done) | F.col("partition").isNull())
+            parts.append(v)
         except Exception as e:  # noqa: BLE001 — same per-rule degradation
             if not batch_member:  # run-level finding: batch 0 owns
                 synthetic.append(
                     (f"RULE_ERROR_{rule.rule_id}", "N/A", None, str(e).splitlines()[0][:200])
                 )
-        _mark(f"dispatch {rule.rule_id}", _t)
 
     if synthetic:
         parts.append(
@@ -680,11 +462,9 @@ def run_validation(
             F.coalesce(F.col("_viols"), F.lit(0)).alias("violations"),
         )
     )
-    _t = time.monotonic()
     # Same AQE-preserving materialization rule as the violations frame.
     verdicts = verdicts.localCheckpoint(eager=False)
     rows_scanned = verdicts.agg(F.sum("rows_scanned")).collect()[0][0] or 0
-    _mark("rule_plans_and_verdicts", _t)
     wall_ms = int((time.monotonic() - t0) * 1000)
     # Spark can't attribute wall-time to a logical partition inside one job;
     # the checkpoint stores the run-level wall time on each row (documented).

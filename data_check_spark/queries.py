@@ -1,7 +1,7 @@
 """Driver-contract query registry: Spark queries + DuckDB oracle SQL.
 
 Every entry exercises one operator family from SURVEY.md §2 (rule compiler,
-salted uniqueness, referential joins, summary aggregation, window dedup,
+two-phase uniqueness, referential joins, summary aggregation, window dedup,
 broadcast-join enrichment, …) against the driver-generated TPC-H-ish parquet
 tables, paired with ANSI SQL the DuckDB oracle runs on the same files.
 
@@ -154,7 +154,7 @@ def row_rules_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2. Uniqueness — salted two-phase dedup, both variants
+# 2. Uniqueness — two-phase (partial + final count) dedup, both variants
 #    (reference: CHK_0008 dekispart.py:234-245; dekispart_school.py:204-208)
 # ---------------------------------------------------------------------------
 
@@ -1067,7 +1067,7 @@ def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table PORTABLY (every column is md5-prefix arithmetic over documents.doc_id,
 # with violation bands planted the same way datagen plants them), runs the
 # REAL engine (engine.run_validation: wide pass, one-projection row rules,
-# shared salted uniqueness, fused anti+match dim join, verdict machinery) over
+# shared two-phase uniqueness, fused anti+match dim join, verdict machinery) over
 # it with a bytes-free catalog, and has DuckDB re-derive the exact violation
 # multiset from first principles. This puts the engine's END-TO-END
 # composition — dispatch, rule fusion, blank-key exemptions, emission formats

@@ -37,9 +37,9 @@ Row-local kinds (compiled into the single-pass projection):
                             parse-null escalation (dekispart.py:855-859,
                             innosite.py:417-419, 396-398).
 
-Set-oriented kinds (dispatched to operators, not the projection):
+Set-oriented kinds (built by their ``SET_KINDS`` entry, not the projection):
 
-- ``unique``              — salted two-phase duplicate detection
+- ``unique``              — duplicate detection (partial + final count)
 - ``referential``         — semi/anti join against a dimension table
 - ``aggregate_unique``    — one violation per duplicate *value* (reference:
                             dekispart_school.py:204-208)
@@ -88,8 +88,36 @@ Set-oriented kinds (dispatched to operators, not the projection):
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
+
+from pyspark.sql import Column, DataFrame
+
+from data_check_spark.operators.audio import (
+    snr_column_violations,
+    transcript_match_violations,
+    transcript_wer_violations,
+)
+from data_check_spark.operators.drift import (
+    categorical_drift_violations,
+    drift_violations,
+    rate_drift_violations,
+    volume_drift_violations,
+)
+from data_check_spark.operators.funcdep import func_dep_violations
+from data_check_spark.operators.profile import agg_threshold_violations, outlier_violations
+from data_check_spark.operators.referential import (
+    anti_join_violations,
+    cardinality_rule_violations,
+    orphan_violations,
+    reconcile_violations,
+    semi_join_violations,
+)
+from data_check_spark.operators.uniqueness import (
+    aggregate_unique_violations,
+    unique_violations,
+)
 
 ROW_LOCAL_KINDS = {
     "not_null",
@@ -103,22 +131,166 @@ ROW_LOCAL_KINDS = {
     "date_parse",
 }
 
-SET_KINDS = {
-    "agg_threshold",
-    "unique",
-    "aggregate_unique",
-    "referential",
-    "drift",
-    "cat_drift",
-    "rate_drift",
-    "volume_drift",
-    "audio_decode",
-    "transcript_match",
-    "transcript_wer",
-    "func_dep",
-    "outlier",
-    "reconcile",
-    "cardinality",
+
+@dataclass(frozen=True)
+class SetScope:
+    """What a set-rule builder reads besides its rule and input table."""
+
+    dims: dict[str, DataFrame]
+    partition_col: str
+    gate: Column | None = None  # the rule's gate, for gate="operator" kinds
+    dups: DataFrame | None = None  # shared duplicate_keys, for shares_dups kinds
+
+
+@dataclass(frozen=True)
+class SetKind:
+    """How the engine runs one set-oriented kind.
+
+    ``build(rule, df, scope)`` returns the rule's violation rows over ``df``.
+    ``gate``: ``"filter"`` the input by the rule's gate before building,
+    hand it to the ``"operator"``, or ``"reject"`` a gated rule when it is
+    constructed (its operator would ignore the gate); a callable of the
+    params where it depends on them.
+    ``global_grain``: the output depends on the whole table, so a resume run
+    builds the rule over every partition and a member batch leaves it to
+    the owner batch; a callable of (params, partition_col) where it depends.
+    ``dims(params)``: the dimension tables the rule reads.
+    ``shares_dups``: ungated rules of this kind on the same column share one
+    ``duplicate_keys`` computation (``scope.dups``).
+    """
+
+    build: Callable[[Rule, DataFrame, SetScope], DataFrame]
+    gate: str | Callable[[dict[str, Any]], str] = "filter"
+    global_grain: bool | Callable[[dict[str, Any], str], bool] = False
+    dims: Callable[[dict[str, Any]], set[str]] = lambda p: set()
+    shares_dups: bool = False
+
+    def gate_mode(self, params: dict[str, Any]) -> str:
+        return self.gate(params) if callable(self.gate) else self.gate
+
+    def is_global(self, params: dict[str, Any], partition_col: str) -> bool:
+        g = self.global_grain
+        return g(params, partition_col) if callable(g) else g
+
+
+def _param_dim(p: dict[str, Any]) -> set[str]:
+    return {p["dim"]} if "dim" in p else set()
+
+
+def _referential(r: Rule, df: DataFrame, s: SetScope) -> DataFrame:
+    p, mode = r.params, r.params.get("mode", "anti")
+    keys = dict(fact_key=r.column or "clip_id", dim_key=p.get("dim_key", "clip_id"))
+    if mode == "orphan":
+        return orphan_violations(df, s.dims[p["dim"]], r.rule_id, **keys)
+    if mode not in ("anti", "semi"):
+        raise ValueError(f"unknown referential mode {mode!r} ({r.rule_id})")
+    op = anti_join_violations if mode == "anti" else semi_join_violations
+    return op(df, s.dims[p["dim"]], r.rule_id, gate=s.gate,
+              partition_col=s.partition_col, **keys)
+
+
+def _transcript(op, **extra):
+    # The join key is params["dim_key"] on BOTH sides and the compared fact
+    # column is rule.column, exactly as the fused dim join reads them.
+    def build(r: Rule, df: DataFrame, s: SetScope) -> DataFrame:
+        p = r.params
+        return op(df, s.dims[p["dim"]], r.rule_id,
+                  fact_key=p.get("dim_key", "clip_id"), dim_key=p.get("dim_key", "clip_id"),
+                  fact_text=r.column or "transcript",
+                  ref_text=p.get("ref_column", "transcript_ref"),
+                  partition_col=s.partition_col,
+                  **{k: p.get(k, v) for k, v in extra.items()})
+    return build
+
+
+# The one table of set-oriented kinds. Global grain (see SetKind): the
+# uniqueness kinds and func_dep (the duplicate / violating key set spans the
+# table); cat/rate/volume drift (their baseline is the CURRENT table's mix,
+# rate or mean size); reconcile and referential orphan (orphan child rows
+# have no fact partition); cardinality (child counts are a property of the
+# whole child table); outlier grouped by anything but the partition column
+# (the fence then spans partitions).
+SET_KINDS: dict[str, SetKind] = {
+    "unique": SetKind(
+        lambda r, df, s: unique_violations(df, r.rule_id, r.column or "clip_id",
+                                           partition_col=s.partition_col, dups=s.dups),
+        global_grain=True, shares_dups=True),
+    "aggregate_unique": SetKind(
+        lambda r, df, s: aggregate_unique_violations(df, r.rule_id, r.column or "clip_id",
+                                                     dups=s.dups),
+        global_grain=True, shares_dups=True),
+    "referential": SetKind(
+        _referential,
+        gate=lambda p: "reject" if p.get("mode") == "orphan" else "operator",
+        global_grain=lambda p, partition_col: p.get("mode") == "orphan",
+        dims=_param_dim),
+    "drift": SetKind(
+        lambda r, df, s: drift_violations(df, s.dims["baseline_stats"], r.rule_id, r.column,
+                                          threshold=r.params.get("threshold", 0.25),
+                                          partition_col=s.partition_col),
+        gate="reject", dims=lambda p: {"baseline_stats"}),
+    "cat_drift": SetKind(
+        lambda r, df, s: categorical_drift_violations(
+            df, r.rule_id, r.column or "codec",
+            threshold_bp=r.params.get("threshold_bp", 2500),
+            min_rows=r.params.get("min_rows", 100), partition_col=s.partition_col),
+        gate="reject", global_grain=True),
+    "rate_drift": SetKind(
+        lambda r, df, s: rate_drift_violations(
+            df, r.rule_id, r.params["predicate"],
+            threshold_bp=r.params.get("threshold_bp", 500),
+            min_rows=r.params.get("min_rows", 100), partition_col=s.partition_col),
+        gate="reject", global_grain=True),
+    "volume_drift": SetKind(
+        lambda r, df, s: volume_drift_violations(
+            df, r.rule_id, threshold_bp=r.params.get("threshold_bp", 5000),
+            partition_col=s.partition_col),
+        gate="reject", global_grain=True),
+    # SNR is computed once in the engine's wide pass (SNR_COL); this reads it.
+    "audio_decode": SetKind(
+        lambda r, df, s: snr_column_violations(
+            df, r.rule_id, snr_db_min=r.params.get("snr_db_min", 30.0),
+            gate=s.gate, partition_col=s.partition_col),
+        gate="operator"),
+    "agg_threshold": SetKind(
+        lambda r, df, s: agg_threshold_violations(
+            df, r.rule_id, r.params["metric_expr"],
+            min_value=r.params.get("min_value"), max_value=r.params.get("max_value"))),
+    "outlier": SetKind(
+        lambda r, df, s: outlier_violations(
+            df, r.rule_id, r.column, partition_col=s.partition_col,
+            group_col=r.params.get("group_by"), scale=r.params.get("scale", 100)),
+        global_grain=lambda p, partition_col: p.get("group_by") not in (None, partition_col)),
+    "func_dep": SetKind(
+        lambda r, df, s: func_dep_violations(
+            df, r.rule_id, r.params["determinant"], r.column,
+            partition_col=s.partition_col,
+            count_null_dependent=r.params.get("count_null_dependent", False),
+            grain=r.params.get("grain", "row")),
+        global_grain=True),
+    "reconcile": SetKind(
+        lambda r, df, s: reconcile_violations(
+            df, s.dims[r.params["dim"]], r.rule_id,
+            parent_key=r.params.get("fact_key", "clip_id"),
+            child_key=r.params.get("dim_key", "clip_id"),
+            total_col=r.column, amount_col=r.params["amount_col"],
+            tolerance_cents=r.params.get("tolerance_cents", 0),
+            partition_col=s.partition_col),
+        global_grain=True, dims=_param_dim),
+    "cardinality": SetKind(
+        lambda r, df, s: cardinality_rule_violations(
+            df, s.dims[r.params["dim"]], r.rule_id,
+            parent_key=r.params.get("fact_key", "clip_id"),
+            child_key=r.params.get("dim_key", "clip_id"),
+            min_children=r.params.get("min_children", 1),
+            max_children=r.params.get("max_children"),
+            partition_col=s.partition_col),
+        global_grain=True, dims=_param_dim),
+    "transcript_match": SetKind(
+        _transcript(transcript_match_violations), gate="reject", dims=_param_dim),
+    "transcript_wer": SetKind(
+        _transcript(transcript_wer_violations, max_wer_bp=2500),
+        gate="reject", dims=_param_dim),
 }
 
 
@@ -139,8 +311,16 @@ class Rule:
     message: str = ""
 
     def __post_init__(self) -> None:
-        if self.kind not in ROW_LOCAL_KINDS | SET_KINDS:
+        if self.kind not in ROW_LOCAL_KINDS and self.kind not in SET_KINDS:
             raise ValueError(f"unknown rule kind: {self.kind!r} ({self.rule_id})")
+        if self.gate and not self.is_row_local and (
+            SET_KINDS[self.kind].gate_mode(self.params) == "reject"
+        ):
+            mode = f" mode {self.params['mode']!r}" if "mode" in self.params else ""
+            raise ValueError(
+                f"rule {self.rule_id}: kind {self.kind!r}{mode} applies no gate, "
+                f"so the gate {self.gate!r} would be silently ignored"
+            )
 
     @property
     def is_row_local(self) -> bool:

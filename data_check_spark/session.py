@@ -12,6 +12,7 @@ only ``master`` and the memory/shuffle knobs change via ``--conf``.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +46,40 @@ _BASE_CONF: dict[str, str] = {
     "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL": "system",
     "spark.ui.enabled": "false",
 }
+
+
+# Local-mode driver heap when SPARK_GRAFT_DRIVER_MEM is unset: this share of
+# physical memory, capped. The heap is pinned and pre-touched (see below), so
+# a heap the machine cannot back is OOM-killed at JVM start.
+_HEAP_SHARE = 0.6
+_HEAP_CAP_MB = 16 * 1024
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def physical_memory_mb() -> int:
+    """Physical memory of this machine in MiB (Linux: /proc/meminfo MemTotal)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+
+
+def driver_heap(requested: str | None, total_mb: int) -> str:
+    """The local driver heap as a JVM size string: ``requested`` if given
+    (e.g. ``"8g"``, ``"4096m"``), else ~60% of ``total_mb`` capped at 16g.
+    Raises ValueError for a malformed size or one above physical memory."""
+    if requested is None:
+        return f"{min(int(total_mb * _HEAP_SHARE), _HEAP_CAP_MB)}m"
+    m = re.fullmatch(r"(\d+)([kmgt])", requested.strip().lower())
+    if m is None:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={requested!r}: expected a size like 8g or 4096m"
+        )
+    if int(m[1]) * _UNIT_MB[m[2]] > total_mb:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={requested} exceeds this machine's "
+            f"{total_mb} MiB of physical memory; the pinned, pre-touched heap "
+            "would be OOM-killed at JVM start. Unset it for the default "
+            f"({_HEAP_SHARE:.0%} of physical memory, at most 16g) or pick less."
+        )
+    return m[1] + m[2]
 
 
 def get_spark(
@@ -81,7 +116,7 @@ def get_spark(
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        mem = driver_heap(os.environ.get("SPARK_GRAFT_DRIVER_MEM"), physical_memory_mb())
         conf.setdefault("spark.driver.memory", mem)
         # Pin + pre-touch the heap and use a non-uncommitting GC: a growing
         # or shrinking heap re-faults pages continuously, and with 32 task

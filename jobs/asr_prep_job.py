@@ -8,7 +8,7 @@ token indices; the 100 TB byte column is read exactly once, by the decode
 pass, and never shuffled).
 
     python tools/package_pyfiles.py                 # → dist/data_check_spark.zip
-    spark-submit --master <cluster> --driver-memory 16g \\
+    spark-submit --master <cluster> --driver-memory <heap> \\
         --py-files dist/data_check_spark.zip \\
         jobs/asr_prep_job.py \\
         --input  <clips parquet> \\

@@ -118,12 +118,16 @@ def main(argv: list[str] | None = None) -> int:
     # (driver-side Catalyst analysis only, no jobs) and keep what resolves;
     # dropped rule ids are reported in the summary so the narrowing is
     # visible, and the micro-batch engine path still runs the full catalog
-    # (the batch engine owns its own schema handling).
+    # (the batch engine owns its own schema handling). Only an analysis
+    # error is a schema gap: a broken rule (a {run_ts} rule without
+    # --run-ts, a malformed spec or expression) fails the job instead.
+    from pyspark.errors import AnalysisException, ParseException
+
     from data_check_spark.rules.compiler import apply_row_rules, compile_row_rules
     from data_check_spark.rules.spec import RuleCatalog
 
     probe = spark.createDataFrame([], schema)
-    keep, dropped = [], []
+    keep, dropped = [], {}
     for r in catalog.rules:
         if not r.is_row_local:
             keep.append(r)
@@ -133,12 +137,14 @@ def main(argv: list[str] | None = None) -> int:
                 probe, compile_row_rules([r], run_ts), partition_col="partition"
             )
             keep.append(r)
-        except Exception:
-            dropped.append(r.rule_id)
+        except ParseException:
+            raise
+        except AnalysisException as e:
+            dropped[r.rule_id] = str(e).splitlines()[0][:200]
     stream_catalog = RuleCatalog(keep)
-    if dropped:
-        # report the narrowing immediately (daemon mode has no summary line)
-        print(f"row rules skipped for stream schema: {sorted(dropped)}",
+    # report the narrowing immediately (daemon mode has no summary line)
+    for rule_id, reason in sorted(dropped.items()):
+        print(f"row rule {rule_id} skipped for stream schema: {reason}",
               file=sys.stderr)
 
     # Before starting anything: in a reused session a PREVIOUSLY-terminated

@@ -47,6 +47,29 @@ def test_dup_values_has_partial_aggregation(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
+def test_duplicate_keys_single_exchange(spark):
+    """Uniqueness needs no salt: a partial count per map task below ONE
+    exchange, the final count above it. A planted hot key (500 of 2000
+    rows) still comes out as one duplicate row with its full count."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from data_check_spark.operators.uniqueness import duplicate_keys
+
+    df = spark.range(0, 2000, numPartitions=8).select(
+        F.when(F.col("id") % 4 == 0, F.lit("hot"))
+        .otherwise((F.col("id") % 700).cast("string")).alias("clip_id")
+    )
+    dups = duplicate_keys(df, "clip_id")
+    plan = _plan(dups)
+    assert plan.count("Exchange") == 1
+    assert plan.index("Exchange") < plan.index("partial_count")  # prints top-down
+    assert plan.count("HashAggregate") == 2
+    keys = Counter("hot" if i % 4 == 0 else str(i % 700) for i in range(2000))
+    assert dict(dups.collect()) == {k: n for k, n in keys.items() if n > 1}
+
+
 def test_row_rules_single_scan(spark):
     from data_check_spark.queries import QUERIES
 

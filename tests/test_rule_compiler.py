@@ -334,10 +334,17 @@ def test_every_rule_kind_round_trips_through_json(tmp_path):
         "cardinality": {"dim": "d", "dim_key": "k", "fact_key": "f",
                         "min_children": 1, "max_children": 1},
     }
+
+    def gate(kind: str) -> str | None:
+        # kinds that apply no gate reject one (test_gate_rejected_where_ignored)
+        if kind in SET_KINDS and SET_KINDS[kind].gate_mode(params_by_kind.get(kind, {})) == "reject":
+            return None
+        return "col IS NOT NULL"
+
     rules = [
         Rule(f"R_{i}", kind, "col", params_by_kind.get(kind, {}),
-             gate="col IS NOT NULL", severity="warning", name=f"n{i}")
-        for i, kind in enumerate(sorted(ROW_LOCAL_KINDS | SET_KINDS))
+             gate=gate(kind), severity="warning", name=f"n{i}")
+        for i, kind in enumerate(sorted(ROW_LOCAL_KINDS | SET_KINDS.keys()))
     ]
     cat = RuleCatalog(rules)
     path = str(tmp_path / "rules.json")
@@ -346,6 +353,29 @@ def test_every_rule_kind_round_trips_through_json(tmp_path):
     assert [r.to_dict() for r in loaded] == [r.to_dict() for r in cat]
     # and the file itself is plain JSON a deployment tool can lint
     assert len(json.load(open(path))) == len(rules)
+
+
+@pytest.mark.parametrize("kind, params", [
+    ("drift", {"threshold": 0.25}),
+    ("cat_drift", {}),
+    ("rate_drift", {"predicate": "a IS NULL"}),
+    ("volume_drift", {}),
+    ("transcript_match", {"dim": "d"}),
+    ("transcript_wer", {"dim": "d"}),
+    ("referential", {"dim": "d", "mode": "orphan"}),
+])
+def test_gate_rejected_where_ignored(kind, params):
+    """A gate on a kind whose operator never reads it would validate the
+    whole table while claiming a scope: the rule is refused, by id and kind."""
+    from data_check_spark.rules.spec import Rule, load_catalog
+
+    with pytest.raises(ValueError, match=f"R_GATED: kind '{kind}'"):
+        Rule("R_GATED", kind, "col", params, gate="col IS NOT NULL")
+    # the same refusal reaches a --rules JSON catalog
+    with pytest.raises(ValueError, match="R_GATED"):
+        load_catalog([{"rule_id": "R_GATED", "kind": kind, "column": "col",
+                       "params": params, "gate": "col IS NOT NULL"}])
+    Rule("R_UNGATED", kind, "col", params)
 
 
 def test_corpus_catalog_on_documents_shape(spark):

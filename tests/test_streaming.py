@@ -516,6 +516,31 @@ def test_stream_validate_job_once_drains_and_resumes(spark, tmp_path):
     assert sorted(r["partition"] for r in dup_rows) == ["p0", "p1"]
 
 
+def test_stream_validate_job_broken_rule_is_not_a_schema_skip(spark, tmp_path):
+    """Only an analysis error against the stream schema skips a row rule: a
+    {run_ts} rule without --run-ts fails the job with its reason instead of
+    being reported as "skipped for stream schema"."""
+    import datetime as dt
+    import json as _json
+
+    from jobs.stream_validate_job import main as job_main
+
+    in_dir = str(tmp_path / "in")
+    _write_batch(spark, in_dir,
+                 [("c1", 16000, 1000, "flac", "t", "p0", dt.datetime(2026, 1, 1))], 1)
+    rules = tmp_path / "rules.json"
+    rules.write_text(_json.dumps([
+        {"rule_id": "R_FUTURE", "kind": "cross_column",
+         "params": {"expr": "event_ts > {run_ts}"}},
+    ]))
+    with pytest.raises(ValueError, match="R_FUTURE needs run_ts"):
+        job_main([
+            "--input", in_dir, "--rules", str(rules),
+            "--output-dir", str(tmp_path / "out"),
+            "--checkpoint-dir", str(tmp_path / "ckpt"), "--once",
+        ])
+
+
 def test_stream_validate_job_once_survives_query_failure(spark, tmp_path, capsys):
     """A query that FAILS mid-execution (corrupt parquet file in the input)
     must not abort the drain: awaitTermination's StreamingQueryException is

@@ -25,7 +25,7 @@ AUDITED = [
      "filter/column pruning pushed to the scan (ReadSchema lists only rule "
      "columns)."),
     ("dup_values_lineitem",
-     "Two-phase uniqueness: partial_count by (key, salt) before the exchange "
+     "Two-phase uniqueness: partial_count by key before the exchange "
      "(map-side combine), merge after — the shuffle moves partial counts, "
      "never rows."),
     ("region_revenue",
